@@ -17,6 +17,7 @@ import os
 import statistics
 import sys
 import time
+from collections.abc import Iterable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -54,7 +55,8 @@ def headline_queries() -> dict:
 # distinguish from a real regression. Guard: a fixed-cost pure-CPU
 # canary (400M xxhash64 folds across all cores, no I/O, no data
 # dependence) timed before AND after the sweep against a ratcheted
-# floor recorded in tools/canary_floor.json. If either reading exceeds
+# floor recorded in tools/canary_floor_c{N}.json (N = core count, see
+# below). If either reading exceeds
 # floor×1.3 the artifact is stamped "load_suspect": true — numbers are
 # still reported, but flagged as not comparable round-over-round.
 
@@ -65,15 +67,20 @@ _FLOOR_DIR = os.environ.get(
     "SPARK_GRAFT_FLOOR_DIR",
     os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"),
 )
+
+
+def _cpus() -> int:
+    """$SPARK_GRAFT_CPUS as a number, so '08' and '8 ' name the same
+    floor file and history key as '8'."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
 # r16: the canary floor is per-core-count (canary_floor_c32.json etc.;
 # the legacy canary_floor.json was migrated to _c32) — the driver's
 # lower-core companion run reads the same pure-CPU canary ~cores-ratio
 # slower, which against a 32-core floor auto-stamped EVERY scaling run
 # load_suspect and kept its readings out of any history.
-_CANARY_FLOOR_FILE = os.path.join(
-    _FLOOR_DIR,
-    f"canary_floor_c{os.environ.get('SPARK_GRAFT_CPUS', '32')}.json",
-)
+_CANARY_FLOOR_FILE = os.path.join(_FLOOR_DIR, f"canary_floor_c{_cpus()}.json")
 _CANARY_ROWS = 400_000_000
 #: Calibrated on this box (round 8): idle fresh-JVM min-of-3 canary
 #: readings span 0.14-0.22s (~1.55× — JIT/GC state, not load), while
@@ -200,8 +207,7 @@ def _history_key(sf_dir_or_sf) -> str:
     floor; the legacy 'sf0.1' entries were migrated to 'sf0.1c32'
     (this box's historical core count) in the repo sidecars."""
     sf = sf_dir_or_sf if isinstance(sf_dir_or_sf, float) else _sf_of(sf_dir_or_sf)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return f"sf{sf}c{cpus}"
+    return f"sf{sf}c{_cpus()}"
 
 
 def _median3(fn) -> float:
@@ -516,17 +522,23 @@ def emit_result(result: dict, budget: int = _STDOUT_LINE_BUDGET) -> str:
 
 
 def record_query_floors(
-    sf_key: str, timings: dict[str, float], flagged: bool
+    sf_key: str,
+    timings: dict[str, float],
+    flagged: bool,
+    inflated: Iterable[str] = (),
 ) -> None:
     """Fold this sweep's warm readings into the rolling per-query
     history — UNLESS any detector flagged the sweep (a loaded sweep
     must not ratchet the quiet floors upward, the same hygiene rule
-    as the canary history)."""
+    as the canary history). A query still ``inflated`` after its
+    retry is left out for the same reason."""
     if flagged:
         return
     store = _query_floor_store()
     per_sf = store.setdefault(sf_key, {})
     for q, t in timings.items():
+        if q in inflated:
+            continue
         per_sf[q] = (per_sf.get(q, []) + [t])[-_QUERY_FLOOR_MAX:]
     try:
         with open(_QUERY_FLOOR_FILE, "w") as f:
@@ -809,7 +821,7 @@ def main() -> None:
         or canary_post["loaded"]
         or inflation["loaded"]
     )
-    record_query_floors(sf_key, timings, load_suspect)
+    record_query_floors(sf_key, timings, load_suspect, inflated)
     if inflation["median_inflation"] is not None:
         print(
             f"# query-floor inflation: median "

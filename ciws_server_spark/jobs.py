@@ -195,8 +195,10 @@ def ingest_line_protocol(
     batch).
 
     The whole path — parse, type, route — is native column functions
-    on a text scan: no Python in the loop, so a large backfill is
-    scan-bound.
+    on a text scan: no Python in the loop. The parse is a chain of
+    staged selects so each intermediate is computed once per line
+    (plans/line_protocol.py explains why; its array lambdas run
+    interpreted, not whole-stage codegen'd).
     """
     from .plans.line_protocol import parse_lines, typed_fields
 

@@ -67,7 +67,7 @@ from ..plans.influxql import (
     run_influxql,
     statement_order_desc,
 )
-from ..plans.line_protocol import parse_lines, typed_fields
+from ..plans.line_protocol import field_type, parse_lines, typed_fields
 from . import sinks
 
 _PRECISION_NS = {
@@ -456,6 +456,53 @@ def serialize_frame_chunks(
         yield {"statement_id": statement_id}
 
 
+def _write_summary(parsed: DataFrame):
+    """Everything a /write must know about its parsed batch before it
+    appends, from ONE single-task aggregate (``coalesce(1)``: no
+    shuffle stage): the unparseable-line count, {measurement: {field:
+    line-protocol type}} and {measurement: tag keys}. The collect is
+    one row holding the batch's distinct line SHAPES (measurement, tag
+    keys, field keys and types) — schema-sized, never point-sized.
+    Conflicting types for one field are upstream's named 400, raised
+    as InfluxQLError (only checked when every line parsed)."""
+    shape = F.struct(
+        "measurement",
+        F.map_keys("tags").alias("tags"),
+        F.transform(
+            F.map_entries("fields"),
+            lambda e: F.struct(
+                e["key"].alias("k"), field_type(e["value"]).alias("t")
+            ),
+        ).alias("fields"),
+    )
+    row = (
+        parsed.coalesce(1)
+        .agg(
+            F.count_if(F.col("fields").isNull()).alias("bad"),
+            F.collect_set(shape).alias("shapes"),
+        )
+        .collect()[0]
+    )
+    if row["bad"]:
+        return row["bad"], {}, {}
+    types: dict[tuple[str, str], set[str]] = {}
+    tags_by_m: dict[str, set[str]] = {}
+    for s in row["shapes"]:
+        tags_by_m.setdefault(s["measurement"], set()).update(s["tags"] or ())
+        for f in s["fields"]:
+            types.setdefault((s["measurement"], f["k"]), set()).add(f["t"])
+    for (m, k), ts in sorted(types.items()):
+        if len(ts) > 1:
+            a, b = sorted(ts)[:2]
+            raise InfluxQLError(
+                f"field type conflict: {m}.{k} written as both {a} and {b}"
+            )
+    schemas: dict[str, dict[str, str]] = {}
+    for (m, k), ts in types.items():
+        schemas.setdefault(m, {})[k] = ts.pop()
+    return 0, schemas, tags_by_m
+
+
 class InfluxHTTPApi:
     """The engine-owned handler logic behind the three endpoints."""
 
@@ -740,19 +787,20 @@ class InfluxHTTPApi:
             return 400, {"error": str(exc)}
         if not lines:
             return 400, {"error": "empty write body"}
-        raw = self.spark.createDataFrame(
-            [(s,) for s in lines], "value string"
+        # the body enters the JVM as ONE string literal and is split
+        # into rows there: no Python-side rows, no pickled RDD
+        raw = self.spark.range(1, numPartitions=1).select(
+            F.explode(F.split(F.lit("\n".join(lines)), "\n")).alias("value")
         )
         parsed = parse_lines(raw).localCheckpoint(eager=True)
-        bad = parsed.where(F.col("fields").isNull()).count()
+        try:
+            bad, schemas, tags_by_m = _write_summary(parsed)
+        except InfluxQLError as exc:
+            return 400, {"error": str(exc)}
         if bad:
             return 400, {
                 "error": f"unable to parse {bad} line(s) of line protocol"
             }
-        try:
-            schemas = self._infer_schemas(parsed)
-        except InfluxQLError as exc:
-            return 400, {"error": str(exc)}
         for measurement in schemas:
             try:
                 # a measurement maps to one path component in this
@@ -761,23 +809,13 @@ class InfluxHTTPApi:
                 sinks.validate_table(measurement)
             except ValueError as exc:
                 return 400, {"error": str(exc)}
-        # EVERY tag in the batch persists as a string column — the
-        # line-protocol contract (a tag not in the measurement's
-        # partition layout is still data, never silently dropped).
-        # The collect is (measurement × tag-key) rows: schema-sized.
-        tags_by_m: dict[str, set[str]] = {}
-        for r in (
-            parsed.select(
-                "measurement", F.explode(F.map_keys("tags")).alias("k")
-            )
-            .distinct()
-            .collect()
-        ):
-            tags_by_m.setdefault(r["measurement"], set()).add(r["k"])
         appended = 0
         for measurement, fields in sorted(schemas.items()):
             typed = typed_fields(parsed, measurement, fields)
             parts = sinks.PARTITIONING.get(measurement, [])
+            # EVERY tag in the batch persists as a string column — the
+            # line-protocol contract (a tag not in the measurement's
+            # partition layout is still data, never silently dropped):
             # partition tags first (present even when a line omits
             # them — partitionBy needs the column), then the rest
             part_tags = [p for p in parts if p != "date"]
@@ -852,43 +890,6 @@ class InfluxHTTPApi:
             if mult != 1:
                 return f"{head} {ns}"
         return line
-
-    def _infer_schemas(self, parsed) -> dict[str, dict[str, str]]:
-        """(measurement, field) → line-protocol type, inferred from
-        value syntax; conflicting syntaxes are a named error, as
-        upstream rejects cross-type writes. Distributed classify +
-        distinct; the collect is (measurement × field × type) rows —
-        schema-sized, never point-sized."""
-        cls = (
-            parsed.select(
-                "measurement", F.explode("fields").alias("k", "v")
-            )
-            .select(
-                "measurement",
-                "k",
-                F.when(F.col("v").rlike(r"^-?\d+i$"), "integer")
-                .when(F.col("v").rlike(r'^".*"$'), "string")
-                .when(
-                    F.lower("v").isin("t", "true", "f", "false"),
-                    "boolean",
-                )
-                .otherwise("float")
-                .alias("t"),
-            )
-            .distinct()
-            .collect()
-        )
-        schemas: dict[str, dict[str, str]] = {}
-        for r in cls:
-            seen = schemas.setdefault(r["measurement"], {})
-            if r["k"] in seen and seen[r["k"]] != r["t"]:
-                raise InfluxQLError(
-                    f"field type conflict: {r['measurement']}."
-                    f"{r['k']} written as both {seen[r['k']]} "
-                    f"and {r['t']}"
-                )
-            seen[r["k"]] = r["t"]
-        return schemas
 
 
 def serve(api: InfluxHTTPApi, host: str = "127.0.0.1", port: int = 0):

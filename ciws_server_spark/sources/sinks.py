@@ -1190,7 +1190,7 @@ def _write_layout(
 
 
 def _publish_snapshot(
-    root: str, tmp: str, before: set, what: str
+    root: str, tmp: str, before: set, what: str, carry=None
 ) -> None:
     """Shared snapshot-publish tail for rewriting mutators (compact,
     delete): rename the finished build to the next ``root.vNNNNNN``
@@ -1198,13 +1198,24 @@ def _publish_snapshot(
     recoverable unreferenced-version state the compactor protocol
     already heals), then, under an exclusive write lock, run the
     optimistic commit-time conflict check and atomically repoint the
-    symlink."""
+    symlink.
+
+    ``carry`` (delete only) lets a rewrite survive concurrent APPENDS
+    that commute with it: when the file set only grew, it is called
+    with the added files' paths relative to the table root, and a
+    true result hardlinks them into the new snapshot instead of
+    aborting. Without it, a DELETE whose rewrite outlasts the gap
+    between appends would lose every retry to the append stream."""
     versions = _version_dirs(root)
     nv = (_v_of(versions[-1]) + 1) if versions else 1
     vnext = f"{root}.v{nv:06d}"
     os.rename(tmp, vnext)  # durable completion marker
     with _flock(_lock_file(root, "write"), exclusive=True):
-        if _visible_file_set(root) != before:
+        now = _visible_file_set(root)
+        added = sorted(rel for rel, _ in now - before)
+        if now != before and not (
+            carry is not None and before <= now and carry(added)
+        ):
             # a writer committed during the rewrite: the snapshot in
             # vnext is missing those rows — publishing it would lose
             # them. Abort (drop vnext), leave the live table as-is.
@@ -1213,6 +1224,16 @@ def _publish_snapshot(
                 f"{root}: file set changed during {what}; "
                 f"rewritten snapshot dropped — retry"
             )
+        current = os.path.realpath(root)
+        for rel in added:
+            dst = os.path.join(vnext, rel)
+            if os.path.lexists(dst):
+                continue  # appended before the rewrite linked its tree
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            try:
+                os.link(os.path.join(current, rel), dst)
+            except OSError:
+                shutil.copy2(os.path.join(current, rel), dst)
         swap = root + ".swap"
         if os.path.lexists(swap):
             os.remove(swap)
@@ -1287,7 +1308,11 @@ def delete_points(
     ``.write.lock`` around capture and validate+swap, optimistic
     conflict check, atomic symlink repoint, crash states healed by
     ``recover_compaction`` (the durable marker is the same
-    ``root.vNNNNNN`` rename).
+    ``root.vNNNNNN`` rename). One difference: appends committed
+    during the rewrite whose rows the predicate does not match
+    commute with the delete, so they are carried into the new
+    snapshot rather than aborting it; any other change still raises
+    :class:`ConcurrentAppendDetected`.
 
     ``predicate`` is a Column or a Spark SQL string; partition
     columns are in scope. Rows where the predicate evaluates to NULL
@@ -1438,7 +1463,14 @@ def _delete_locked(spark, table_dir, table, root, pred) -> int:
                 os.path.join(dirpath, fname), os.path.join(dst_dir, fname)
             )
     shutil.rmtree(sub)
-    _publish_snapshot(root, tmp, before, "delete")
+
+    def commutes(added: list[str]) -> bool:
+        # appended rows the predicate does not match are untouched by
+        # this delete in either order: carry them into the snapshot
+        paths = [os.path.join(root, rel) for rel in added]
+        return reader.parquet(*paths).where(pred).isEmpty()
+
+    _publish_snapshot(root, tmp, before, "delete", carry=commutes)
     return int(n_deleted)
 
 

@@ -251,8 +251,9 @@ def stream_line_protocol(
 
     ``schemas`` maps measurement → {field: line-protocol type}; each
     measurement must appear in sinks.PARTITIONING (or lands
-    unpartitioned). The parse is native column functions end-to-end
-    (plans/line_protocol.py), so the per-batch plan is codegen'd.
+    unpartitioned). The parse is native column functions end to end,
+    staged so each intermediate is computed once per line
+    (plans/line_protocol.py; its array lambdas run interpreted).
     """
     from ..plans.line_protocol import parse_lines, typed_fields
 

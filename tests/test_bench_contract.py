@@ -496,3 +496,20 @@ def test_emit_result_fits_driver_stdout_window(tmp_path, monkeypatch):
     # the full artifact is on disk, untrimmed
     full = json.loads((tmp_path / "full.json").read_text())
     assert full["anchor"]["windows"] and full["cold"]
+
+
+def test_floor_history_hygiene(tmp_path, monkeypatch):
+    """The core count is read as a number ('08' and '8 ' key the same
+    history as '8'), and a query still inflated after its retry is
+    not folded into the quiet floors."""
+    import bench
+
+    for raw in ("8", "08", "8 "):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
+        assert bench._history_key(0.1) == "sf0.1c8"
+    f = tmp_path / "query_floor.json"
+    monkeypatch.setattr(bench, "_QUERY_FLOOR_FILE", str(f))
+    bench.record_query_floors(
+        "sf0.1c8", {"q_ok": 1.0, "q_hot": 9.0}, False, ["q_hot"]
+    )
+    assert json.loads(f.read_text()) == {"sf0.1c8": {"q_ok": [1.0]}}

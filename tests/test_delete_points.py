@@ -192,7 +192,7 @@ def test_delete_crash_before_swap_heals(spark, tmp_path, monkeypatch):
 
     real_publish = sinks._publish_snapshot
 
-    def crash_after_marker(r, tmp, before, what):
+    def crash_after_marker(r, tmp, before, what, carry=None):
         versions = sinks._version_dirs(r)
         nv = (int(versions[-1][-6:]) + 1) if versions else 1
         os.rename(tmp, f"{r}.v{nv:06d}")
@@ -506,3 +506,45 @@ def test_path_hostile_measurement_names_rejected(spark, tmp_path):
 
     assert not os.path.lexists(os.path.join(td, "..", "escape"))
     assert not os.path.lexists(os.path.join(td, "tar"))
+
+
+@pytest.mark.parametrize(
+    "building, carried", [("C", True), ("A", False)]
+)
+def test_delete_vs_append_during_rewrite(
+    spark, tmp_path, monkeypatch, building, carried
+):
+    """An append that commits while a DELETE rewrites: rows the
+    predicate does not match commute with the delete, so they are
+    carried into the published snapshot (the delete does not abort,
+    nothing is lost); rows it does match abort the delete, leaving
+    the live table as it was, appended row included."""
+    table_dir = str(tmp_path)
+    root = _mk_table(spark, table_dir)
+    extra = spark.createDataFrame(
+        [(dt.datetime(2024, 1, 1, 7, 0), building, 9.0)],
+        "time timestamp, buildingID string, flowRate double",
+    )
+    real_flock = sinks._flock
+    calls = {"write_ex": 0}
+
+    def racing_flock(path, exclusive, blocking=True):
+        # the delete's write-lock EX acquisitions: #1 = capture,
+        # #2 = validate+swap; append just before #2
+        if path.endswith(".write.lock") and exclusive:
+            calls["write_ex"] += 1
+            if calls["write_ex"] == 2:
+                sinks.append_points(extra, table_dir, "campus_flow")
+        return real_flock(path, exclusive, blocking)
+
+    monkeypatch.setattr(sinks, "_flock", racing_flock)
+    pred = "buildingID = 'A' AND flowRate >= 3"
+    if carried:
+        assert sinks.delete_points(spark, table_dir, "campus_flow", pred) == 4
+    else:
+        with pytest.raises(sinks.ConcurrentAppendDetected):
+            sinks.delete_points(spark, table_dir, "campus_flow", pred)
+    monkeypatch.undo()
+    rows = spark.read.parquet(root)
+    assert rows.count() == (20 - 4 + 1 if carried else 20 + 1)
+    assert rows.where(f"buildingID = '{building}' AND flowRate = 9").count() == 1

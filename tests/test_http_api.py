@@ -165,13 +165,44 @@ def test_write_type_conflict_and_garbage(api):
     status, resp = api.handle_write(
         {}, b"m f=1.5 1\nm f=2i 2\n"
     )
-    assert status == 400 and "conflict" in resp["error"]
+    assert (status, resp) == (
+        400,
+        {"error": "field type conflict: m.f written as both float and integer"},
+    )
+    # the two types are named in sorted order, whatever order the
+    # batch holds them in
+    status, resp = api.handle_write(
+        {}, b"m f=2i 1\nm f=1.5 2\n"
+    )
+    assert resp["error"].endswith("both float and integer")
     status, resp = api.handle_write({}, b"not line protocol at all")
     assert status == 400
     status, resp = api.handle_write({}, b"")
     assert status == 400
     status, resp = api.handle_write({"precision": "x"}, b"m f=1")
     assert status == 400
+
+
+def test_write_runs_at_most_three_jobs(api, spark):
+    """A single-measurement /write is three Spark jobs: the eager parse
+    checkpoint, one summary aggregate and the parquet append. A later
+    collect or count creeping back into the write path fails this."""
+    body = "\n".join(
+        f"campus_flow,buildingID=B{i % 5} flowRate={i}.5 "
+        f"{1704096000000000000 + i * 1_000_000_000}"
+        for i in range(2000)
+    ).encode()
+    sc = spark.sparkContext
+    sc.setJobGroup("write-job-count", "one /write")
+    try:
+        status, _ = api.handle_write({}, body)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert status == 204
+    # job-start events reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("write-job-count")
+    assert 1 <= len(jobs) <= 3, jobs
 
 
 def test_real_socket_round_trip(api):

@@ -151,36 +151,48 @@ def test_influxql_where_matches_python_model(spark, expr):
     assert got == exp, expr
 
 
-_IDENT = st.text(
-    alphabet=st.characters(
-        whitelist_categories=("Lu", "Ll", "Nd"), max_codepoint=0x7F
-    ),
-    min_size=1,
-    max_size=12,
-)
-
-
 def _lp_escape(s: str) -> str:
     return s.replace(",", "\\,").replace(" ", "\\ ").replace("=", "\\=")
 
 
-@settings(max_examples=10, deadline=None)
+#: ASCII letters and digits plus the three characters identifiers
+#: must escape (written as \, \  and \=)
+_LP_IDENT = st.text(
+    alphabet=st.characters(
+        whitelist_categories=("Lu", "Ll", "Nd"),
+        max_codepoint=0x7F,
+        whitelist_characters=" ,=",
+    ),
+    min_size=1,
+    max_size=12,
+)
+#: tag/field keys from a small pool too, so repeated keys are common
+_LP_KEY = st.one_of(st.sampled_from(["k", "v"]), _LP_IDENT)
+#: quoted string field contents: spaces, commas, '=' and '"' (written
+#: as \")
+_LP_STRING = st.text(alphabet=st.sampled_from('ab9 ,="'), max_size=8)
+_LP_FLOAT = st.floats(
+    allow_nan=False, allow_infinity=False, min_value=-1e6, max_value=1e6
+)
+
+
+def _lp_value(v) -> str:
+    if isinstance(v, str):
+        return '"' + v.replace('"', '\\"') + '"'
+    return repr(v)
+
+
+@settings(max_examples=25, deadline=None)
 @given(
     st.lists(
         st.tuples(
-            _IDENT,  # measurement
-            st.dictionaries(_IDENT, _IDENT, min_size=0, max_size=3),  # tags
-            st.dictionaries(
-                _IDENT,
-                st.floats(
-                    allow_nan=False,
-                    allow_infinity=False,
-                    min_value=-1e6,
-                    max_value=1e6,
-                ),
+            _LP_IDENT,  # measurement
+            st.lists(st.tuples(_LP_KEY, _LP_IDENT), max_size=3),  # tags
+            st.lists(
+                st.tuples(_LP_KEY, st.one_of(_LP_FLOAT, _LP_STRING)),
                 min_size=1,
-                max_size=3,
-            ),  # float fields
+                max_size=4,
+            ),  # float and string fields
             st.integers(min_value=0, max_value=2**53),  # ts ns
         ),
         min_size=1,
@@ -190,27 +202,33 @@ def _lp_escape(s: str) -> str:
 def test_line_protocol_roundtrip(spark, points):
     """Generate line-protocol text from structured points; parsing it
     back recovers measurement/tags/fields/timestamp exactly (µs
-    truncation of the ns timestamp)."""
+    truncation of the ns timestamp). Identifiers carry escaped
+    commas, spaces and equals signs; string fields carry unescaped
+    ones and escaped quotes; a repeated tag or field key keeps its
+    LAST value."""
     from ciws_server_spark.plans.line_protocol import parse_lines
 
     lines = []
     for meas, tags, fields, ts in points:
         head = _lp_escape(meas)
-        for k, v in tags.items():
+        for k, v in tags:
             head += f",{_lp_escape(k)}={_lp_escape(v)}"
-        body = ",".join(
-            f"{_lp_escape(k)}={repr(v)}" for k, v in fields.items()
-        )
+        body = ",".join(f"{_lp_escape(k)}={_lp_value(v)}" for k, v in fields)
         lines.append(f"{head} {body} {ts}")
     df = spark.createDataFrame([(ln,) for ln in lines], "value STRING")
     got = parse_lines(df).collect()
     assert len(got) == len(points)
     for r, (meas, tags, fields, ts) in zip(got, points):
         assert r["measurement"] == meas
-        assert (r["tags"] or {}) == tags
-        assert set(r["fields"]) == set(fields)
-        for k, v in fields.items():
-            assert float(r["fields"][k]) == v
+        assert (r["tags"] or {}) == dict(tags)
+        want = dict(fields)  # last wins
+        assert set(r["fields"]) == set(want)
+        for k, v in want.items():
+            if isinstance(v, str):
+                # raw map values keep the quotes; \" reads back as "
+                assert r["fields"][k] == f'"{v}"'
+            else:
+                assert float(r["fields"][k]) == v
         import datetime as dt
 
         expect = dt.datetime(1970, 1, 1) + dt.timedelta(
